@@ -1,11 +1,13 @@
 """Public operator API — the engine's reusable surface over arbitrary
 DataFrames.
 
-The ``operators.*`` modules bind each capability to the synthetic fixture
-tables for the correctness driver; this module is the same machinery
-parameterized by (df, column) so a user can point it at their own data —
-the 'switch from the reference and run every query' contract
-(SURVEY §2.5: ``minhash_dedup(df, text_col)``, ``ann_join(df, emb_col, k)``).
+Each function here is parameterized by (df, column) so a user can point
+it at their own data — the 'switch from the reference and run every
+query' contract (SURVEY §2.5: ``minhash_dedup(df, text_col)``,
+``ann_join(df, emb_col, k)``). Where a function is the kernel of a
+capability, the ``operators.*`` fixture queries call it: they hold only
+the fixture wiring (``load_table``, the api call, renames, ordering) and
+the DuckDB twin SQL that checks it.
 
 All functions return DataFrames (lazy, composable) and never collect
 except where the algorithm itself is driver-scale (documented per
@@ -18,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_analytics_cse545_spark.functions.text import TOKEN_SPLIT_RE
+from big_data_analytics_cse545_spark.functions.text import stopword_count, tokens
 
 # ---------------------------------------------------------------------------
 # text
@@ -28,29 +30,39 @@ from big_data_analytics_cse545_spark.functions.text import TOKEN_SPLIT_RE
 def tokenize(df: DataFrame, text_col: str, out_col: str = "tokens") -> DataFrame:
     """Lowercase word tokens (the reference's tokenizer semantics,
     a1p1_ahuja.py:184 / a1p2b_ahuja.py:68, normalized to one regex)."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
-    return df.withColumn(out_col, toks)
+    return df.withColumn(out_col, tokens(F.col(text_col)))
 
 
 def quality_score(df: DataFrame, text_col: str, out_col: str = "quality") -> DataFrame:
     """[0,1] quality from length / stopword share / mean token length
-    (operators.text.t06 semantics, reusable)."""
-    from big_data_analytics_cse545_spark.functions.text import (
-        stopword_count,
-        token_count,
-    )
+    (the t06 kernel). Text with no tokens (empty or NULL) scores NULL:
+    ``least`` skips NULLs, so without the guard a NULL text would score
+    a perfect 1.0. try_divide keeps ANSI mode from raising on 0 tokens.
 
-    toks = token_count(F.col(text_col))
-    mean_len = F.length(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", "")) / toks
-    stop_ratio = stopword_count(F.col(text_col)) / toks
+    The tokens are projected once (``_qt``) and every feature reads that
+    column: inlined, the guard's CASE would re-split the text per
+    feature (t06 at sf0.1 on a 4-core VM: 0.92 s inlined, 0.52 s staged)."""
+    toks = F.col("_qt")
+    n_tok = F.size(toks)
+    mean_len = F.try_divide(
+        F.aggregate(
+            F.transform(toks, lambda t: F.length(t)),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        ),
+        n_tok,
+    )
+    stop_ratio = F.try_divide(stopword_count(toks), n_tok)
     q = (
-        F.least(toks / F.lit(100.0), F.lit(1.0)) * 0.5
+        F.least(n_tok / F.lit(100.0), F.lit(1.0)) * 0.5
         + F.least(stop_ratio / F.lit(0.1), F.lit(1.0)) * 0.3
         + F.least(mean_len / F.lit(6.0), F.lit(1.0)) * 0.2
     )
-    return df.withColumn(out_col, q)
+    return (
+        df.withColumn("_qt", tokens(F.col(text_col)))
+        .withColumn(out_col, F.when(n_tok > 0, q))
+        .drop("_qt")
+    )
 
 
 def pack_sequences(
@@ -62,22 +74,18 @@ def pack_sequences(
     max_len: int = 512,
     out_col: str = "pack_id",
 ) -> DataFrame:
-    """Assign each row to a context-window pack (operators.text.t12
-    semantics, row-level): rows are concatenated per ``stream_col`` in
+    """Assign each row to a context-window pack (the t12 kernel,
+    row-level): rows are concatenated per ``stream_col`` in
     ``id_col`` order and chunked every ``max_len`` whitespace tokens; a
     row's pack is where its first token lands. One running-sum window
     per stream — no cross-stream shuffle."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
     w = (
         Window.partitionBy(stream_col)
         .orderBy(id_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    n_tok = F.size(toks).cast("long")
     return (
-        df.withColumn("_n_tok", n_tok)
+        df.withColumn("_n_tok", F.size(tokens(F.col(text_col))).cast("long"))
         .withColumn("_cum", F.sum("_n_tok").over(w))
         .withColumn(
             out_col, F.floor((F.col("_cum") - F.col("_n_tok")) / max_len).cast("long")
@@ -97,10 +105,7 @@ def repetition_signals(df: DataFrame, text_col: str) -> DataFrame:
     trade for filter pipelines where docs are bounded. t13's
     explode+groupBy form is the alternative when single docs can be
     huge; the two are cross-checked in tests/test_sampling.py."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
-    df = df.withColumn("_ts", toks).withColumn(
+    df = df.withColumn("_ts", tokens(F.col(text_col))).withColumn(
         "_bg",
         F.expr(
             "transform(slice(_ts, 1, greatest(size(_ts) - 1, 0)),"
@@ -201,17 +206,19 @@ def pii_scrub(df: DataFrame, text_col: str) -> DataFrame:
 
 
 def _word_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id_col, shingle) — distinct word n-gram shingles per row."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
+    """(id_col, shingle) — distinct word n-gram shingles per row, each
+    the ``_``-joined run of ``n`` tokens. The one shingle kernel: the
+    MinHash funnel (d03, d10), decontamination (d07) and the exact and
+    MLlib Jaccard paths (d02, d06) all shingle through it. Rows with
+    fewer than ``n`` tokens (or NULL text) yield no shingles."""
+    gram = ", ".join(f"element_at(_ts, i + {k})" if k else "element_at(_ts, i)" for k in range(n))
     shingles = F.expr(
         f"CASE WHEN size(_ts) >= {n} THEN array_distinct(transform("
-        f"sequence(1, size(_ts) - {n} + 1), "
-        f"i -> array_join(slice(_ts, i, {n}), '_'))) ELSE array() END"
+        f"sequence(1, size(_ts) - {n - 1}), i -> concat_ws('_', {gram})"
+        ")) ELSE array() END"
     )
     return (
-        df.select(id_col, toks.alias("_ts"))
+        df.select(id_col, tokens(F.col(text_col)).alias("_ts"))
         .select(id_col, F.explode(shingles).alias("shingle"))
     )
 
@@ -264,6 +271,10 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # round-trips): band keys from different families never collide, so a
 # mismatch must be a loud error, not an empty candidate join.
 MINHASH_SCHEME = "km2-md5"
+# K-M double-hashing modulus (2^31 − 1, Mersenne prime): keeps every
+# (h1 + s·h2) product inside a BIGINT under ANSI overflow checking and
+# is reproducible as exact integer arithmetic in DuckDB.
+MINHASH_P = 2147483647
 
 
 def _shingle_bands(
@@ -276,31 +287,39 @@ def _shingle_bands(
     shingle_size: int,
 ) -> tuple[DataFrame, DataFrame]:
     """(shingles, band_keys) for MinHash-LSH: shingles = (_id, _sh)
-    distinct word n-grams; band_keys = (_id, _band, _key). One
-    aggregation pass computes all minhashes as separate agg columns (a
-    single doc-keyed shuffle, never an n_hashes× explode). Shared by
-    minhash_dedup_pairs (self-join dedup) and incremental_dedup
-    (batch-vs-corpus)."""
-    n_bands = n_hashes // band_rows
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
-    shingles = F.expr(
-        f"CASE WHEN size(_ts) >= {shingle_size} THEN array_distinct(transform("
-        f"sequence(1, size(_ts) - {shingle_size - 1}), "
-        f"i -> concat_ws('_', {', '.join(f'element_at(_ts, i + {k})' for k in range(shingle_size))})"
-        ")) ELSE array() END"
-    )
-    sh = (
-        df.select(F.col(id_col).alias("_id"), toks.alias("_ts"))
-        .select("_id", F.explode(shingles).alias("_sh"))
-    )
-    # K-M double hashing (round 7, the operators.dedup._band_keys_df
-    # scheme and rationale): 2 md5's per shingle row instead of
-    # n_hashes — measured 5.7× faster signature aggregation at the 10×
-    # scale corpus, same oracle-replayable exact integer arithmetic
-    from big_data_analytics_cse545_spark.operators.dedup import MINHASH_P
+    distinct word n-grams; band_keys = (_id, _band, _key), n_hashes //
+    band_rows keys per row. The one MinHash banding kernel, shared by
+    minhash_dedup_pairs (self-join dedup, d03) and incremental_dedup
+    (batch-vs-corpus, d10).
 
+    One aggregation pass computes all minhashes as separate agg columns
+    — a single id-keyed shuffle instead of an n_hashes× shingle-row
+    explode (the naive seeds-cross-join shuffles n_hashes× the shingle
+    table; at 100 TB that explode is the bottleneck). Band key = md5 of
+    the band's minhashes, seed-ordered (the oracle's string_agg ORDER BY
+    seed).
+
+    Hash family: Kirsch–Mitzenmacher double hashing — per shingle TWO
+    md5-derived 60-bit values reduced mod MINHASH_P, then the n_hashes
+    functions are ``(h1 + s·h2) mod MINHASH_P``. Computing n_hashes full
+    md5's per shingle row and min-aggregating 32-char hex strings
+    measured 41.7 s vs 7.3 s for this family at the 10× scale corpus
+    (2.6 M shingle rows, persisted input, noop sink) — the md5 calls
+    dominate (an xxhash64 control runs 2.5 s, but DuckDB cannot
+    reproduce xxhash64, and the oracle must replay the EXACT hash family
+    because banding recall is probabilistic, not 1.0). md5 stays as the
+    base hash because both engines compute it bit-identically; the K-M
+    reduction cuts the md5 count per row from n_hashes to 2, and the
+    min-agg buffers from hex strings to longs. Products fit a BIGINT by
+    construction (h2 < 2^31, so s·h2 < 2^36 at the default 32 hashes),
+    so ANSI overflow checking never fires. Planted-dup recall
+    (test_lsh_recalls_planted_duplicates) holds at 1.0 on the fixtures,
+    per the K-M guarantee that pairwise collision behavior matches
+    independent hashing up to O(1/P) terms."""
+    n_bands = n_hashes // band_rows
+    sh = _word_shingles(df, text_col, id_col, shingle_size).select(
+        F.col(id_col).alias("_id"), F.col("shingle").alias("_sh")
+    )
     h1 = (
         F.conv(
             F.substring(F.md5(F.concat(F.lit("a|"), F.col("_sh"))), 1, 15),
@@ -351,8 +370,11 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
 ) -> DataFrame:
     """Near-duplicate id pairs (id1 < id2, jaccard) via MinHash+LSH with
-    exact verification on candidates — operators.dedup.d03 generalized.
-    Returns columns (id1, id2, jaccard)."""
+    exact verification on candidates (the d03 kernel). Returns columns
+    (id1, id2, jaccard)."""
+    # sh is NOT cached: persisting it for its 4 references measured a
+    # wash for d03 and a regression for d10 (round-12 A/B) — the eager
+    # materialization barrier costs more than the re-tokenizes it saves
     sh, bands = _shingle_bands(
         df, text_col, id_col,
         n_hashes=n_hashes, band_rows=band_rows, shingle_size=shingle_size,
@@ -458,9 +480,6 @@ def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFra
     """64-bit SimHash fingerprint column (md5-nibble bits, no UDF)."""
     from big_data_analytics_cse545_spark.operators.dedup import _bit_weight
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
     # one md5 per token, pre-parsed into four 16-bit integer quarters;
     # each bit vote is then an integer shift+mask over the quarter array
     # (the round-2 form re-derived md5+locate per bit — 64× per token)
@@ -479,7 +498,7 @@ def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFra
         f"IF({v}, shiftleft(1L, {j}), 0L)" for j, v in enumerate(bit_votes)
     )
     return (
-        df.withColumn("_ts", toks)
+        df.withColumn("_ts", tokens(F.col(text_col)))
         .withColumn("_qs", F.expr(quarters))
         .withColumn(out_col, F.expr(sim).cast("long"))
         .drop("_ts", "_qs")
@@ -1307,16 +1326,14 @@ def chunk_documents(
     chunk_tokens: int = 32,
     stride: int = 24,
 ) -> DataFrame:
-    """Overlapping token-window chunking (operators.text.t17 semantics
-    over any table): one row per (id, chunk_idx) with the chunk's tokens
-    re-joined. Zero-shuffle narrow fan-out — sequence/transform/slice/
-    posexplode, all JVM-side."""
-    toked = df.select(
-        F.col(id_col),
-        F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE),
-            lambda t: t != F.lit(""),
-        ).alias("toks"),
+    """Overlapping token-window chunking (the t17 kernel): one row per
+    (id, chunk_idx) with the chunk's tokens re-joined. Zero-shuffle
+    narrow fan-out — sequence/transform/slice/posexplode, all JVM-side.
+    A NULL-text row has no chunks (without the filter, its NULL token
+    array would emit one junk NULL-chunk row); an empty text has one
+    empty chunk."""
+    toked = df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col), tokens(F.col(text_col)).alias("toks")
     )
     starts = F.sequence(
         F.lit(0), F.greatest(F.size("toks") - 1, F.lit(0)), F.lit(stride)
@@ -1472,8 +1489,8 @@ def incremental_dedup(
     threshold: float = 0.7,
 ) -> DataFrame:
     """Judge each BATCH row against an existing CORPUS without any
-    corpus-vs-corpus work (operators.dedup.d10 generalized to two
-    arbitrary DataFrames). Returns the batch with three extra columns:
+    corpus-vs-corpus work (the d10 kernel, over two arbitrary
+    DataFrames). Returns the batch with three extra columns:
 
     - ``exact_dup``   — md5(text) collides with a corpus row;
     - ``near_dup_of`` — smallest corpus id with verified shingle
@@ -1619,12 +1636,7 @@ def bm25_score(
     and broadcast, so the text column never leaves the scan."""
     tok = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("_w"),
+        F.explode(tokens(F.col(text_col))).alias("_w"),
     )
     doclen = tok.groupBy("_id").agg(F.count(F.lit(1)).alias("_dl"))
     stats = doclen.agg(
@@ -1674,12 +1686,7 @@ def perplexity_gate(
     Returns (id, n_tok, sum_nll_micro, ppl_bucket, mean_nll)."""
     tok = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("_w"),
+        F.explode(tokens(F.col(text_col))).alias("_w"),
     )
     vocab = tok.groupBy("_w").agg(F.count(F.lit(1)).alias("_cnt"))
     tot = vocab.agg(F.sum("_cnt").alias("_t"), F.count(F.lit(1)).alias("_v"))

@@ -68,6 +68,8 @@ def bigrams(ts: Column, sep: str = "_") -> Column:
     )
 
 
-def stopword_count(col: Column) -> Column:
+def stopword_count(ts: Column) -> Column:
+    """Number of STOPWORDS in a token ARRAY (e.g. ``tokens(col)``), so a
+    caller that already holds the tokens does not split the text again."""
     stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(stop, t)))
+    return F.size(F.filter(ts, lambda t: F.array_contains(stop, t)))

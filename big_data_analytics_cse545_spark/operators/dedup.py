@@ -18,8 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_analytics_cse545_spark import api
+from big_data_analytics_cse545_spark.api import MINHASH_P
 from big_data_analytics_cse545_spark.cache import swap_cached
-from big_data_analytics_cse545_spark.functions.text import TOKEN_SPLIT_RE, tokens
+from big_data_analytics_cse545_spark.functions.text import tokens
 from big_data_analytics_cse545_spark.sources import load_table, spread_scan
 
 _SQL_TOKENS = (
@@ -29,43 +31,23 @@ _SQL_TOKENS = (
 # MinHash parameters: 32 hashes in 8 bands of 4 rows → catches jaccard
 # ≳0.7 with high probability while keeping false candidates rare.
 N_HASHES = 32
-# K-M double-hashing modulus (2^31 − 1, Mersenne prime): keeps every
-# (h1 + s·h2) product inside a BIGINT under ANSI overflow checking and
-# is reproducible as exact integer arithmetic in DuckDB (see
-# _band_keys_df).
-MINHASH_P = 2147483647
 BAND_ROWS = 4
-N_BANDS = N_HASHES // BAND_ROWS
 JACCARD_THRESHOLD = 0.8
 JACCARD_THRESHOLD_D10 = 0.7  # batch-vs-corpus near-dup verify (d10), same
                              # bar as d03's pair output threshold
 
 
-def _tokens_col():
-    # the one shared tokenizer (functions.text.tokens) — a verbatim
-    # local copy used to live here, a silent-divergence surface for any
-    # future tokenization change (round-6 review)
-    return tokens(F.col("text"))
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table, spread (sources.spread_scan) before the
+    tokenize+shingle fan-out: over a single-row-group fixture the whole
+    shingle pipeline otherwise runs as ONE scan-stage task; at scale the
+    spread is a no-op (round-12 optimization, guide §2.5/§6)."""
+    return spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
 
 
 def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle) — distinct 3-gram word shingles per document.
-
-    The scan is spread (sources.spread_scan) before the tokenize+shingle
-    fan-out: over a single-row-group fixture the whole shingle pipeline
-    otherwise runs as ONE scan-stage task; at scale the spread is a
-    no-op (round-12 optimization, guide §2.5/§6)."""
-    d = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    shingles = F.expr(
-        "CASE WHEN size(ts) >= 3 THEN array_distinct(transform("
-        "sequence(1, size(ts) - 2), "
-        "i -> concat_ws('_', element_at(ts, i), element_at(ts, i + 1), element_at(ts, i + 2))"
-        ")) ELSE array() END"
-    )
-    return (
-        d.select("doc_id", _tokens_col().alias("ts"))
-        .select("doc_id", F.explode(shingles).alias("shingle"))
-    )
+    """(doc_id, shingle) — distinct 3-gram word shingles per document."""
+    return api._word_shingles(_documents(spark, sf_dir), "text", "doc_id", 3)
 
 
 _SQL_SHINGLES = f"""
@@ -88,7 +70,7 @@ def d01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is one shuffle on a 16-byte key, never on the text itself.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens_col()
+    toks = tokens(F.col("text"))
     return (
         d.select(
             "source",
@@ -193,74 +175,7 @@ ORDER BY d1, d2
 # d03 — MinHash + LSH banding (the scale path)
 # ---------------------------------------------------------------------------
 
-def _band_keys_df(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) — MinHash(N_HASHES) banded into N_BANDS
-    keys per document. One aggregation pass computes all minhashes as
-    separate agg columns — a single shuffle keyed by doc_id instead of a
-    N_HASHES× shingle-row explode (the naive seeds-cross-join shuffles
-    N_HASHES× the shingle table; at 100 TB that explode is the
-    bottleneck). Band key = md5 of the band's minhashes, seed-ordered
-    (matches the oracle's string_agg ORDER BY seed). Shared by d03
-    (self-dedup) and d10 (incremental batch-vs-corpus dedup).
-
-    Hash family (round 7): Kirsch–Mitzenmacher double hashing — per
-    shingle TWO md5-derived 60-bit values reduced mod MINHASH_P, then
-    the N_HASHES functions are ``(h1 + s·h2) mod MINHASH_P``. The
-    previous family computed N_HASHES full md5's per shingle row and
-    min-aggregated 32-char hex STRINGS; measured at the 10× scale
-    corpus (2.6 M shingle rows, persisted input, noop sink) that
-    aggregation is 41.7 s vs 7.3 s for this one — the md5 calls
-    themselves dominate (an xxhash64 control runs 2.5 s, but DuckDB
-    cannot reproduce xxhash64, and the oracle must replay the EXACT
-    hash family because 8×4 banding recall is probabilistic, not 1.0).
-    md5 stays as the base hash precisely because both engines can
-    compute it bit-identically; the K-M reduction cuts the md5 count
-    per row from N_HASHES to 2, and the min-agg buffers from hex
-    strings to longs. All products fit in a BIGINT by construction
-    (h2 < 2^31, s < 32 ⇒ s·h2 < 2^36), so ANSI overflow checking never
-    fires, and both engines do exact integer arithmetic. Planted-dup
-    recall (test_lsh_recalls_planted_duplicates) holds at 1.0 on the
-    fixtures, per the K-M guarantee that pairwise collision behavior
-    matches independent hashing up to O(1/P) terms."""
-    h1 = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("a|"), F.col("shingle"))), 1, 15),
-            16, 10,
-        ).cast("long") % MINHASH_P
-    )
-    h2 = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("b|"), F.col("shingle"))), 1, 15),
-            16, 10,
-        ).cast("long") % MINHASH_P
-    )
-    minh = (
-        sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.col("h1") + s * F.col("h2")) % MINHASH_P).alias(f"mh{s}")
-                for s in range(N_HASHES)
-            ]
-        )
-    )
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|", *[F.col(f"mh{s}") for s in range(b * BAND_ROWS, (b + 1) * BAND_ROWS)]
-            )
-        ).alias(f"bk{b}")
-        for b in range(N_BANDS)
-    ]
-    return minh.select("doc_id", *band_cols).select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"bk{b}") for b in range(N_BANDS)])).alias(
-            "band", "band_key"
-        ),
-    )
-
-
-# DuckDB twin of _band_keys_df (expects a CTE named ``sh`` with
+# DuckDB twin of api._shingle_bands (expects a CTE named ``sh`` with
 # (doc_id, shingle) in scope): hex-literal CAST parses the md5 prefix
 # (the sampling.py precedent), and the integer K-M arithmetic is exact
 # in both engines. Shared by the d03 and d10 oracles.
@@ -286,55 +201,24 @@ bands AS (
 )"""
 
 def d03_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(32) + LSH(8 bands × 4 rows) near-dup pairs, exact-verified.
+    """MinHash(32) + LSH(8 bands × 4 rows) near-dup pairs, exact-verified
+    — :func:`api.minhash_dedup_pairs` on the documents fixture.
 
     The reference's funnel, re-keyed for text: signature = per-function
-    min of a K-M double-hashed md5 (see :func:`_band_keys_df`; ≙ md5
-    chunk signature, ``a2_ahuja.py:99-120``),
-    banding (≙ ``computeBuckets2``, ``a2_ahuja.py:140-149``), bucket
-    equi-join for candidates (≙ ``computeSimilarCandidates``,
-    ``a2_ahuja.py:164-170``), exact Jaccard only on candidates. Cost at
-    scale: shuffles on 16-byte band keys; the all-pairs join never runs.
+    min of a K-M double-hashed md5 (≙ md5 chunk signature,
+    ``a2_ahuja.py:99-120``), banding (≙ ``computeBuckets2``,
+    ``a2_ahuja.py:140-149``), bucket equi-join for candidates
+    (≙ ``computeSimilarCandidates``, ``a2_ahuja.py:164-170``), exact
+    Jaccard only on candidates. Cost at scale: shuffles on 16-byte band
+    keys; the all-pairs join never runs.
     """
-    # NOT cached (round-12 A/B): persisting sh for its 4 references
-    # measured a wash for d03 (3.89→3.47s min, median worse) and a
-    # regression for d10 (2.45→2.95s) — the eager materialization
-    # barrier costs more than the re-tokenizes it saves, here and at
-    # scale the pipelined recompute also avoids a corpus-sized cache.
-    sh = _shingles_df(spark, sf_dir)
-    bands = _band_keys_df(sh)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
+    pairs = api.minhash_dedup_pairs(
+        _documents(spark, sf_dir), "text", "doc_id",
+        n_hashes=N_HASHES, band_rows=BAND_ROWS, threshold=0.7,
     )
-    # exact verification on candidates only
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a_sh = sh.select(F.col("doc_id").alias("d1"), F.col("shingle").alias("s1"))
-    b_sh = sh.select(F.col("doc_id").alias("bd2"), F.col("shingle").alias("s2"))
-    inter = (
-        cand.join(a_sh, "d1")
-        .join(b_sh, (F.col("d2") == F.col("bd2")) & (F.col("s1") == F.col("s2")))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    c1 = cnt.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    c2 = cnt.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))
-    return (
-        inter.join(c1, "d1")
-        .join(c2, "d2")
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.7)
-        .orderBy("d1", "d2")
-    )
+    return pairs.select(
+        F.col("id1").alias("d1"), F.col("id2").alias("d2"), "jaccard"
+    ).orderBy("d1", "d2")
 
 
 _D03_SQL = f"""
@@ -478,7 +362,7 @@ def simhash_near_dup_pairs(
     # restores the pushdown (PushedFilters gate in PLANS.md), with the
     # join making it a no-op on values by construction.
     toks = spread_scan(d.filter(F.col("doc_id").isNotNull()), "doc_id").select(
-        "doc_id", F.explode(_tokens_col()).alias("tok")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
     )
     # ONE md5 per token, parsed into four 16-bit integer quarters with
     # conv(); each of the 64 vote sums is then an integer shift+mask on
@@ -1211,72 +1095,25 @@ D10_BATCH_REM = 1   # newly-ingested batch; the rest are the existing corpus
 
 
 def d10_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # not spread: batch and corpus would each pay their own exchange
+    # (measured slower than the single-task scan at sf0.01)
     d = load_table(spark, sf_dir, "documents")
     is_batch = d["doc_id"] % D10_BATCH_MOD == D10_BATCH_REM
-    batch = d.filter(is_batch)
-    # exact path: 16-byte content-hash semi-join (never the text itself)
-    corpus_hashes = (
-        d.filter(~is_batch).select(F.md5("text").alias("h")).distinct()
-    )
-    exact = (
-        batch.select("doc_id", F.md5("text").alias("h"))
-        .join(corpus_hashes, "h", "left_semi")
-        .select("doc_id")
-    )
-    # near path: band-bucket candidates restricted to batch×corpus.
-    # sh NOT cached — measured regression (2.45→2.95s min; see d03).
-    sh = _shingles_df(spark, sf_dir)
-    bands = _band_keys_df(sh)
-    band_is_batch = F.col("doc_id") % D10_BATCH_MOD == D10_BATCH_REM
-    bb = bands.filter(band_is_batch).select(
-        F.col("doc_id").alias("bid"), "band", "band_key"
-    )
-    cb = bands.filter(~band_is_batch).select(
-        F.col("doc_id").alias("cid"), "band", "band_key"
-    )
-    cand = bb.join(cb, ["band", "band_key"]).select("bid", "cid").distinct()
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    s1 = sh.select(F.col("doc_id").alias("bid"), F.col("shingle").alias("s1"))
-    s2 = sh.select(F.col("doc_id").alias("scid"), F.col("shingle").alias("s2"))
-    inter = (
-        cand.join(s1, "bid")
-        .join(s2, (F.col("cid") == F.col("scid")) & (F.col("s1") == F.col("s2")))
-        .groupBy("bid", "cid")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    c1 = cnt.select(F.col("doc_id").alias("bid"), F.col("n").alias("n1"))
-    c2 = cnt.select(F.col("doc_id").alias("cid"), F.col("n").alias("n2"))
-    jac = F.round(
-        F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter")), 6
-    )
-    near = (
-        inter.join(c1, "bid")
-        .join(c2, "cid")
-        .filter(jac >= JACCARD_THRESHOLD_D10)
-        .groupBy("bid")
-        .agg(F.min("cid").alias("near_dup_of"))
-    )
-    e = exact.withColumn("is_exact", F.lit(True))
     return (
-        batch.select("doc_id")
-        .join(e, "doc_id", "left")
-        .join(near, batch["doc_id"] == near["bid"], "left")
-        .select(
-            "doc_id",
-            F.coalesce("is_exact", F.lit(False)).alias("exact_dup"),
-            "near_dup_of",
-            F.when(F.coalesce("is_exact", F.lit(False)), "drop_exact")
-            .when(F.col("near_dup_of").isNotNull(), "drop_near")
-            .otherwise("keep")
-            .alias("decision"),
+        api.incremental_dedup(
+            d.filter(is_batch), d.filter(~is_batch), "text", "doc_id",
+            n_hashes=N_HASHES, band_rows=BAND_ROWS,
+            threshold=JACCARD_THRESHOLD_D10,
         )
+        .select("doc_id", "exact_dup", "near_dup_of", "decision")
         .orderBy("doc_id")
     )
 
 
 # assigned after the def: a formatted string literal in docstring
 # position is an expression, not a docstring — __doc__ would be None
-d10_incremental_dedup.__doc__ = """Incremental ingestion dedup: for
+d10_incremental_dedup.__doc__ = """Incremental ingestion dedup
+    (:func:`api.incremental_dedup` on the documents fixture): for
     each document in a NEW batch (doc_id % {M} == {R} stands in for
     today's crawl), decide keep/drop against the EXISTING corpus (all
     other documents) without ever comparing corpus docs to each other:

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from big_data_analytics_cse545_spark import api
 from big_data_analytics_cse545_spark.functions.text import (
     STOPWORDS,
     TOKEN_SPLIT_RE,
@@ -212,7 +213,9 @@ def t05_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # try_divide: a zero-token doc has an undefined ratio -> NULL -> the
     # 'other' branch on both engines (DuckDB x/0 is NULL; ANSI Spark /
     # would THROW on the whole job for one empty page)
-    ratio = F.try_divide(stopword_count(F.col("text")), token_count(F.col("text")))
+    ratio = F.try_divide(
+        stopword_count(tokens(F.col("text"))), token_count(F.col("text"))
+    )
     guess = F.when(ratio >= 0.05, F.lit("en_like")).otherwise(F.lit("other"))
     return (
         d.select("lang", guess.alias("guess"))
@@ -241,35 +244,17 @@ FROM scored GROUP BY lang, guess ORDER BY lang, guess
 # ---------------------------------------------------------------------------
 
 def t06_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document quality metrics → bucketed histogram.
+    """Per-document quality (:func:`api.quality_score`) → bucketed
+    histogram.
 
     Length / mean-token-length / stopword-ratio features (the classic
     pre-training quality filters) as pure expressions; the final
     histogram keeps the output small and hash-stable at any scale.
+    Documents with no tokens land in the NULL bucket.
     """
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_tok = F.size(toks)
-    # try_divide: empty docs get NULL metrics -> NULL bucket, exactly
-    # DuckDB's x/0 semantics (ANSI Spark / would throw on one empty page)
-    mean_len = F.try_divide(
-        F.aggregate(
-            F.transform(toks, lambda t: F.length(t)),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ),
-        n_tok,
-    )
-    stop_ratio = F.try_divide(stopword_count(F.col("text")), n_tok)
-    # quality in [0,1]: long-enough docs with natural stopword share win
-    quality = (
-        F.least(n_tok / F.lit(100.0), F.lit(1.0)) * 0.5
-        + F.least(stop_ratio / F.lit(0.1), F.lit(1.0)) * 0.3
-        + F.least(mean_len / F.lit(6.0), F.lit(1.0)) * 0.2
-    )
-    bucket = F.floor(quality * 10).cast("int")
+    d = api.quality_score(load_table(spark, sf_dir, "documents"), "text")
     return (
-        d.select(bucket.alias("q_bucket"))
+        d.select(F.floor(F.col("quality") * 10).cast("int").alias("q_bucket"))
         .groupBy("q_bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy("q_bucket")
@@ -285,10 +270,10 @@ m AS (
     len(list_filter(ts, t -> t IN {STOPWORDS!r})) / CAST(len(ts) AS DOUBLE) AS stop_ratio
   FROM toks
 )
-SELECT CAST(FLOOR((
+SELECT CASE WHEN n_tok > 0 THEN CAST(FLOOR((
          LEAST(n_tok / 100.0, 1.0) * 0.5
        + LEAST(stop_ratio / 0.1, 1.0) * 0.3
-       + LEAST(mean_len / 6.0, 1.0) * 0.2) * 10) AS INT) AS q_bucket,
+       + LEAST(mean_len / 6.0, 1.0) * 0.2) * 10) AS INT) END AS q_bucket,
        COUNT(*) AS n_docs
 FROM m GROUP BY 1 ORDER BY q_bucket
 """
@@ -641,11 +626,12 @@ PACK_LEN = 512  # context-window size in whitespace tokens
 
 
 def t12_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing, the batching step of an LLM training pipeline:
-    per source, documents are laid out in doc_id order as one token
-    stream cut into PACK_LEN-token windows; a document belongs to the
-    pack where its first token lands (concatenate-and-chunk semantics).
-    Output: per (source, pack_id) document/token counts.
+    """Sequence packing (:func:`api.pack_sequences` on the documents
+    fixture), the batching step of an LLM training pipeline: per source,
+    documents are laid out in doc_id order as one token stream cut into
+    PACK_LEN-token windows; a document belongs to the pack where its
+    first token lands (concatenate-and-chunk semantics). Output: per
+    (source, pack_id) document/token counts.
 
     Shape at scale: ONE running-sum window per stream key — each source
     packs independently in its own partition, no cross-stream shuffle.
@@ -653,21 +639,12 @@ def t12_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partition is unbounded; packing quality is unchanged because
     packs never span stream keys anyway.
     """
-    from pyspark.sql.window import Window
-
-    d = load_table(spark, sf_dir, "documents")
-    per = d.select(
-        "source", "doc_id", F.size(tokens(F.col("text"))).cast("long").alias("n_tok")
+    # n_tok is counted before the kernel, so the text column is pruned
+    # before the window's shuffle instead of riding it to a re-count
+    d = load_table(spark, sf_dir, "documents").withColumn(
+        "n_tok", F.size(tokens(F.col("text"))).cast("long")
     )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    packed = per.withColumn("cum", F.sum("n_tok").over(w)).withColumn(
-        "pack_id",
-        F.floor((F.col("cum") - F.col("n_tok")) / PACK_LEN).cast("long"),
-    )
+    packed = api.pack_sequences(d, "text", "doc_id", "source", max_len=PACK_LEN)
     return (
         packed.groupBy("source", "pack_id")
         .agg(
@@ -1124,39 +1101,19 @@ CHUNK_STRIDE = 24  # stride S (overlap = W - S = 8 tokens)
 
 
 def t17_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_analytics_cse545_spark.functions.text import tokens
-
     d = load_table(spark, sf_dir, "documents")
-    # a NULL-text doc has no chunks (explicit on both sides: without
-    # this, size(NULL) = -1 routes one junk NULL-chunk row per null doc
-    # through the sequence/slice chain)
-    toked = d.filter(F.col("text").isNotNull()).select(
-        "doc_id", tokens(F.col("text")).alias("toks")
-    )
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(F.size("toks") - 1, F.lit(0)),
-        F.lit(CHUNK_STRIDE),
-    )
-    chunks = toked.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(starts, lambda s: F.slice("toks", s + 1, CHUNK_TOKENS))
-        ).alias("chunk_idx", "chunk"),
-    )
-    return chunks.select(
-        "doc_id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.size("chunk").cast("long").alias("n_chunk_tok"),
-        F.array_join("chunk", " ").alias("chunk_text"),
+    return api.chunk_documents(
+        d, "text", "doc_id", chunk_tokens=CHUNK_TOKENS, stride=CHUNK_STRIDE
     ).orderBy("doc_id", "chunk_idx")
 
 
 # assigned after the def: a formatted string literal in docstring
 # position is an expression, not a docstring — __doc__ would be None
 t17_chunk_overlap.__doc__ = """Split every document into overlapping
-    token windows (W={W}, stride={S}) — the chunking step feeding
-    embedding/RAG indexes and fixed-context training examples.
+    token windows (W={W}, stride={S}; :func:`api.chunk_documents` on the
+    documents fixture) — the chunking step feeding embedding/RAG indexes
+    and fixed-context training examples. A NULL-text document has no
+    chunks.
 
     Pure JVM higher-order expressions: ``sequence`` builds the chunk
     starts, ``transform``+``slice`` cuts the windows, ``posexplode``

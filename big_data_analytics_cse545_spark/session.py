@@ -83,7 +83,7 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     # that is pure scheduling overhead (and for stateful streaming, 200
     # state-store instances). BUT only the vanilla default may be
     # replaced — by the env override if set, else by 32: a session
-    # whose creator deliberately set another value (bench.py's 64, the
+    # whose creator deliberately set a value (bench.py's explicit 32, the
     # chaos sweep's degenerate 1/16 probes) must keep it. The env
     # override is likewise restricted to the vanilla default (round-6
     # advice): with SPARK_GRAFT_SHUFFLE_PARTITIONS exported, an

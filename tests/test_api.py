@@ -497,8 +497,14 @@ def test_dup_clusters_matches_operator_and_keeps_one_rep(spark, sf_correctness):
 
 
 def test_chunk_documents_matches_t17(spark, sf_correctness):
+    """Same chunks as t17 over renamed columns; the extra NULL-text row
+    must add no chunk."""
     d = load_table(spark, sf_correctness, "documents").withColumnRenamed(
         "doc_id", "my_id"
+    )
+    d = d.unionByName(
+        d.limit(1).withColumn("my_id", F.lit(-1).cast("long"))
+        .withColumn("text", F.lit(None).cast("string"))
     )
     got = {
         (r["my_id"], r["chunk_idx"]): (r["n_chunk_tok"], r["chunk_text"])
@@ -512,6 +518,18 @@ def test_chunk_documents_matches_t17(spark, sf_correctness):
         for r in text_ops.t17_chunk_overlap(spark, sf_correctness).collect()
     }
     assert got == exp
+
+
+def test_quality_score_on_empty_and_null_text(spark):
+    """Text with no tokens scores NULL (no DIVIDE_BY_ZERO under ANSI,
+    and a NULL text is not a perfect 1.0); real text scores in [0, 1]."""
+    df = spark.createDataFrame(
+        [(1, ""), (2, None), (3, "The cat sat on the mat and looked out of the window.")],
+        "id long, text string",
+    )
+    q = {r["id"]: r["quality"] for r in api.quality_score(df, "text").collect()}
+    assert q[1] is None and q[2] is None
+    assert 0.0 <= q[3] <= 1.0
 
 
 def test_token_budget_select_matches_x04(spark, sf_correctness):

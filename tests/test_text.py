@@ -503,6 +503,34 @@ def test_pathological_documents_do_not_crash_or_diverge(spark, tmp_path):
         assert t13[eid]["dup_token_frac"] is None
 
 
+def test_folded_text_kernels_match_twins_on_empty_and_null_text(spark, sf_smoke, tmp_path):
+    """t06/t12/t17 run through api.quality_score / pack_sequences /
+    chunk_documents; their DuckDB twins must still agree on documents
+    with empty and NULL text (none exist in the generated fixtures)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src = sf_smoke
+    d = str(tmp_path / "null_text_sf")
+    os.makedirs(d)
+    for f in os.listdir(src):
+        if f.endswith(".parquet") and f != "documents.parquet":
+            os.symlink(os.path.join(src, f), os.path.join(d, f))
+    t = pq.read_table(os.path.join(src, "documents.parquet"))
+    ids = t.column("doc_id").to_numpy()
+    txt = t.column("text").combine_chunks()
+    txt = pc.if_else(pa.array(ids % 7 == 3), pa.scalar(None, pa.string()), txt)
+    txt = pc.if_else(pa.array(ids % 7 == 5), pa.scalar("", pa.string()), txt)
+    t = t.set_column(t.schema.get_field_index("text"), "text", txt)
+    pq.write_table(t, os.path.join(d, "documents.parquet"))
+    assert t.column("text").null_count > 0
+    for name in ("t06_quality_score", "t12_pack_sequences", "t17_chunk_overlap"):
+        assert_parity(text.QUERIES[name](spark, d), text.ORACLE[name], d, name)
+
+
 def test_turkish_dotted_i_is_a_known_cross_engine_casing_difference(spark):
     """Pinned engine difference (round-5 --unicode probe): lowercasing
     U+0130 (LATIN CAPITAL LETTER I WITH DOT ABOVE) follows Unicode
