@@ -510,19 +510,6 @@ def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFra
 # ---------------------------------------------------------------------------
 
 
-def _plane_sign_expr(p: int, col: str) -> str:
-    """±1 hyperplane sign vector for plane ``p``, sized to each row's
-    vector via size() — sign(p, d) = parity of the first md5 nibble of
-    'p_d', identical to operators.similarity.s02's driver-side
-    ``plane_sign`` but computed entirely JVM-side so no driver action
-    (and no ``dim`` probe) is needed at plan-construction time."""
-    return (
-        f"transform(sequence(0, size({col}) - 1), "
-        f"d -> CASE WHEN (locate(substr(md5(concat('{p}', '_', cast(d AS STRING))), 1, 1), "
-        f"'0123456789abcdef') - 1) % 2 = 0 THEN 1.0D ELSE -1.0D END)"
-    )
-
-
 def ann_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -542,7 +529,7 @@ def ann_join(
     method='bruteforce' scores everything — EXACT but O(|Q|·|C|); right
     for small corpora (≲10⁵ rows) or pre-pruned candidate sets, never
     for a full production corpus. method='lsh' prunes to a shared
-    random-hyperplane bucket first (operators.similarity.s02 machinery)
+    random-hyperplane bucket first (functions.vectors.hyperplane_bucket_expr)
     — ~1/2^n_planes of the corpus per query, approximate recall; the
     scale path.
 
@@ -554,8 +541,10 @@ def ann_join(
     1-(1-p^n_planes)^n_tables while each query still scores only
     ~n_tables/2^n_planes of the corpus. Table t uses plane indices
     t*n_planes..t*n_planes+n_planes-1 of the same md5 sign family, so
-    n_tables=1 is exactly the round-2 behavior (and s02's); the
-    driver-checked operator form is s06 (operators/similarity.py).
+    n_tables=1 is exactly the round-2 behavior. The oracle-checked
+    fixture queries s01 (bruteforce), s02 (n_tables=1) and s06
+    (n_tables=3) are this function over the embeddings table
+    (operators/similarity.py).
 
     Picking ``n_tables`` from a recall target — measured operating
     points (SCALE.md ANN table, 10× clustered corpus, within-cluster
@@ -581,93 +570,64 @@ def ann_join(
     coincide — otherwise a corpus row with a query's id is silently
     excluded from that query's top-k.
     """
-    import hashlib
-
     from big_data_analytics_cse545_spark.functions.vectors import (
-        cosine,
         cosine_pre,
         dot,
+        hyperplane_bucket_expr,
         norm,
     )
 
     # engine-wide policy: null vectors are excluded from similarity math
     # (a null cosine would otherwise fill sparse top-k tails with null
-    # rows under NULLS LAST ranking)
+    # rows under NULLS LAST ranking). Each side's norm is folded once
+    # per ROW here, before any candidate join, not once per pair —
+    # bit-identical scoring (tests/test_functions.py); the candidate
+    # stage prunes it, so the explode still ships ids+buckets only.
     q = queries.filter(F.col(emb_col).isNotNull()).select(
-        F.col(id_col).alias("q_id"), F.col(emb_col).alias("_q_emb")
+        F.col(id_col).alias("q_id"),
+        F.col(emb_col).alias("_q_emb"),
+        norm(F.col(emb_col)).alias("_q_nrm"),
     )
     c = corpus.filter(F.col(emb_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("_c_emb")
+        F.col(id_col).alias("neighbor_id"),
+        F.col(emb_col).alias("_c_emb"),
+        norm(F.col(emb_col)).alias("_c_nrm"),
     )
-    if dim is not None:
-        # hoist each side's norm out of the pair loop: folded once per
-        # ROW here (before any candidate join), not once per pair —
-        # bit-identical scoring either way (tests/test_functions.py);
-        # the candidate stage prunes these columns, so the ×n_tables
-        # explode still ships ids+buckets only
-        q = q.withColumn("_q_nrm", norm(F.col("_q_emb")))
-        c = c.withColumn("_c_nrm", norm(F.col("_c_emb")))
     not_self = (
         (F.col("q_id") != F.col("neighbor_id")) if exclude_self else F.lit(True)
     )
     if method == "lsh":
 
-        def plane_sign(p: int, d: int) -> float:
-            nib = int(hashlib.md5(f"{p}_{d}".encode()).hexdigest()[0], 16)
-            return 1.0 if nib % 2 == 0 else -1.0
-
-        def bucket(col_name: str, table: int):
-            b = F.lit(0)
-            for p in range(n_planes):
-                gp = table * n_planes + p  # independent planes per table
-                if dim is not None:
-                    signs = F.array(*[F.lit(plane_sign(gp, d)) for d in range(dim)])
-                    dotv = dot(signs, F.col(col_name))
-                else:
-                    signs_sql = _plane_sign_expr(gp, col_name)
-                    dotv = F.expr(
-                        f"aggregate(zip_with(cast({col_name} AS array<double>), "
-                        f"{signs_sql}, (x, s) -> x * s), 0.0D, (acc, v) -> acc + v)"
-                    )
-                b = b + F.when(dotv > 0, F.lit(2 ** p)).otherwise(F.lit(0))
-            return b
-
         def signatures(df: DataFrame, emb: str, id_alias: str) -> DataFrame:
             # one NARROW row per (id, table): ids and buckets only — the
-            # ×n_tables blow-up must never ship the embeddings (the s06
-            # operator's measured shape, operators/similarity.py); join
-            # key is (table, bucket) so tables never cross-match
-            buckets = F.array(*[bucket(emb, t) for t in range(n_tables)])
+            # ×n_tables blow-up must never ship the embeddings; join key
+            # is (table, bucket) so tables never cross-match. Table t
+            # draws planes t*n_planes.. (independent per table).
+            buckets = ", ".join(
+                hyperplane_bucket_expr(emb, n_planes, dim, t * n_planes)
+                for t in range(n_tables)
+            )
             return df.select(
-                F.col(id_alias), F.posexplode(buckets).alias("_t", "_b")
+                id_alias, F.posexplode(F.expr(f"array({buckets})")).alias("_t", "_b")
             )
 
-        q_sig = signatures(q, "_q_emb", "q_id")
-        c_sig = signatures(c, "_c_emb", "neighbor_id")
-        # a pair colliding in several tables must be scored exactly once:
-        # dedup the id-PAIR relation, then rejoin the wide embedding rows
         cand = (
-            q_sig.join(c_sig, ["_t", "_b"])
+            signatures(q, "_q_emb", "q_id")
+            .join(signatures(c, "_c_emb", "neighbor_id"), ["_t", "_b"])
             .filter(not_self)
             .select("q_id", "neighbor_id")
+            # a pair colliding in several tables (or ids repeated in the
+            # input) must be scored once
             .dropDuplicates(["q_id", "neighbor_id"])
         )
+        # only the surviving id pairs rejoin the wide embedding rows
         joined = cand.join(q, "q_id").join(c, "neighbor_id")
     else:
         joined = q.join(c, not_self)
-    if dim is not None:
-        # hoisted per-row norms (bit-identical to cosine(q, c);
-        # tests/test_functions.py) — the norm fold leaves the pair loop
-        cos = F.round(
-            cosine_pre(
-                dot(F.col("_q_emb"), F.col("_c_emb")),
-                F.col("_q_nrm"),
-                F.col("_c_nrm"),
-            ),
-            6,
-        )
-    else:
-        cos = F.round(cosine(F.col("_q_emb"), F.col("_c_emb")), 6)
+    cos = F.round(
+        cosine_pre(dot(F.col("_q_emb"), F.col("_c_emb")), F.col("_q_nrm"), F.col("_c_nrm")),
+        6,
+    )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return (
         joined.select("q_id", "neighbor_id", cos.alias("cos_sim"))
@@ -2510,16 +2470,16 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    from big_data_analytics_cse545_spark.operators.similarity import (
+    from big_data_analytics_cse545_spark.functions.vectors import (
         hyperplane_bucket_expr,
     )
 
+    # bucket the aliased column: the SQL text names it, so a nested
+    # ``emb_col`` (``s.emb``) resolves through F.col first
     src = df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(emb_col).alias("embedding"),
-        hyperplane_bucket_expr(emb_col, n_planes=planes, dim=dim)
-        .cast("int")
-        .alias("cell"),
+        F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")
+    ).withColumn(
+        "cell", F.expr(hyperplane_bucket_expr("embedding", planes, dim)).cast("int")
     )
 
     def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -1,5 +1,5 @@
-"""Vector column expressions — dot products, norms, cosine — as JVM
-expressions, no Python UDFs.
+"""Vector column expressions — dot products, norms, cosine,
+hyperplane-LSH buckets — as JVM expressions, no Python UDFs.
 
 The reference does all vector math in per-row numpy inside RDD lambdas
 (``Assignment 2/a2_ahuja.py:48-49, 257, 299``); these expressions keep the
@@ -34,6 +34,8 @@ Two execution forms, SAME arithmetic (round-12 optimization, guide §4.1):
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -112,3 +114,60 @@ def dot_literal_sql(weights: list[float], y: str) -> str:
         for i, w in enumerate(map(float, weights))
     )
     return "0.0D" + terms
+
+
+# ---------------------------------------------------------------------------
+# random-hyperplane LSH buckets (s02/s05/s06, d11, api.ann_join,
+# api.semantic_dedup)
+# ---------------------------------------------------------------------------
+
+
+def _plane_sign(p: int, d: int) -> int:
+    """Entry ``d`` of hyperplane ``p``: ±1 from the parity of the first
+    hex digit of md5('p_d'), so a DuckDB twin regenerates the identical
+    planes with SQL md5()."""
+    nib = int(hashlib.md5(f"{p}_{d}".encode()).hexdigest()[0], 16)
+    return 1 if nib % 2 == 0 else -1
+
+
+def hyperplane_bucket_expr(
+    col: str, n_planes: int, dim: int | None, plane_offset: int = 0
+) -> str:
+    """Hyperplane-LSH bucket of array column ``col`` as Spark SQL text
+    for ``F.expr``: Σ_p [dot(plane_{offset+p}, col) > 0]·2^p, an int.
+    ``plane_offset`` selects an independent plane family (table t of an
+    OR-construction uses offset t·n_planes).
+
+    With ``dim`` given the signs are literal ``array(±1.0D, …)``; with
+    ``dim=None`` each row derives them from its own size() through the
+    same md5 parity, so no driver action probes the width. Either way
+    each plane is one interpreted ``aggregate(zip_with(…))`` fold — the
+    unrolled 64-term form costs more in analysis/codegen than the fold
+    at bench scale (OPTIMIZATION_r12.md). Text, not Column objects: a
+    Column-built plane is ``dim`` py4j calls (s06's 18 planes × 2 sides:
+    1.15 s median DataFrame build, vs 0.44 s as text, local[4] on a
+    4-core VM); the string parses in one call however many tables a
+    caller packs into one ``array(…)``.
+    A NULL row, or one whose width is not ``dim``, projects to NULL on
+    every plane and lands in bucket 0. ``col`` is one top-level column
+    name, quoted as an identifier: alias a nested field first."""
+    col = col.replace("`", "``")
+    bucket = "0"
+    for p in range(n_planes):
+        gp = plane_offset + p
+        if dim is None:
+            signs = (
+                f"transform(sequence(0, size(`{col}`) - 1), d -> CASE WHEN "
+                f"(locate(substr(md5(concat('{gp}', '_', cast(d AS STRING))), 1, 1), "
+                f"'0123456789abcdef') - 1) % 2 = 0 THEN 1.0D ELSE -1.0D END)"
+            )
+        else:
+            signs = "array(" + ", ".join(
+                f"{_plane_sign(gp, d)}.0D" for d in range(dim)
+            ) + ")"
+        bucket += (
+            f" + CASE WHEN aggregate(zip_with({signs}, `{col}`, "
+            f"(s, x) -> s * CAST(x AS DOUBLE)), 0.0D, (acc, v) -> acc + v) > 0 "
+            f"THEN {2 ** p} ELSE 0 END"
+        )
+    return bucket

@@ -1202,7 +1202,7 @@ def d11_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The paper clusters with k-means; here the coarse partition is the
     md5-parity hyperplane signature shared with s02
-    (:func:`~big_data_analytics_cse545_spark.operators.similarity.hyperplane_bucket_expr`)
+    (:func:`~big_data_analytics_cse545_spark.functions.vectors.hyperplane_bucket_expr`)
     — deterministic, engine-portable, and computed as a pure JVM
     expression during the scan (k-means assignment would be equivalent
     at this step; the spherical-KMeans learner already exists for
@@ -1235,11 +1235,10 @@ def d11_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_analytics_cse545_spark.functions.vectors import (
         cosine_pre,
         dot,
+        hyperplane_bucket_expr,
         norm,
     )
-    from big_data_analytics_cse545_spark.operators.similarity import (
-        hyperplane_bucket_expr,
-    )
+    from big_data_analytics_cse545_spark.operators.similarity import DIM
 
     # norm(embedding) is folded ONCE per row here, not once per
     # intra-cell pair — two of the three per-pair interpreted
@@ -1249,7 +1248,7 @@ def d11_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (round-12 optimization, guide §4.1).
     e = load_table(spark, sf_dir, "embeddings").withColumns(
         {
-            "cell": hyperplane_bucket_expr(n_planes=SEMDEDUP_PLANES),
+            "cell": F.expr(hyperplane_bucket_expr("embedding", SEMDEDUP_PLANES, DIM)),
             "nrm": norm(F.col("embedding")),
         }
     )

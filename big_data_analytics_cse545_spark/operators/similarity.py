@@ -9,21 +9,29 @@ are the scale paths that prune the candidate set before any exact math —
 at 100 TB the cross join in s01 must never run, which is exactly the
 reference's reason for LSH (A2 PDF p.3).
 
+s01, s02 and s06 are fixture wiring over :func:`api.ann_join` (the one
+Spark top-k kernel); s05 (predicate on the candidate join) and s03
+(label-centroid IVF) stay bespoke over the same hyperplane-bucket and
+pair-cosine kernels in ``functions/vectors.py``; s04 is MLlib. Every
+query drops NULL embeddings, as ``api.ann_join`` does, and every
+DuckDB twin carries the matching ``embedding IS NOT NULL`` guard.
+
 Hashing for LSH planes is md5-parity based, so the DuckDB oracle can
 regenerate identical planes with SQL md5().
 """
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from big_data_analytics_cse545_spark import api
 from big_data_analytics_cse545_spark.functions.vectors import (
+    _plane_sign,
     cosine_pre,
     dot,
+    hyperplane_bucket_expr,
     norm,
 )
 from big_data_analytics_cse545_spark.sources import load_table
@@ -34,25 +42,31 @@ TOP_K = 5
 QUERY_MOD = 100   # query set = vec_id % 100 == 0 (scale-proportional)
 
 
-def _queries_df(e: DataFrame) -> DataFrame:
-    return e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings").filter(
+        F.col("embedding").isNotNull()
+    )
+
+
+def _top_k(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
+    """The fixture form of :func:`api.ann_join`: the embeddings table
+    against its own ``vec_id % QUERY_MOD == 0`` query set."""
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") % QUERY_MOD == 0)
+    return (
+        api.ann_join(q, e, "embedding", "vec_id", dim=DIM, **kw)
+        .select("q_id", "neighbor_id", "rk", "cos_sim")
+        .orderBy("q_id", "rk")
     )
 
 
 def _pair_cosine(round_to: int = 6):
-    """The one shared pair-scoring expression: ``round(cosine, 6)`` from
-    a per-pair dot and PER-ROW hoisted norms (``nrm``/``q_nrm`` columns
-    the caller computed before its candidate join). Bit-identical to
-    ``round(cosine(q_emb, embedding), 6)`` — the norm is the same
-    expression on the same row, the division the same doubles
-    (tests/test_functions.py) — but each norm's interpreted
-    ArrayAggregate fold runs once per ROW instead of once per candidate
-    PAIR: two of the three per-pair HOF evaluations disappear from the
-    scoring stage (round-12 optimization, guide §4.1 — the fully
-    UNROLLED spelling was tried and rejected: its expression trees cost
-    more in analysis/codegen per query than the interpreted fold costs
-    at bench scale, OPTIMIZATION_r12.md has the A/B)."""
+    """s03's and s05's pair score, as :func:`api.ann_join` scores:
+    ``round(cosine, 6)`` from a per-pair dot and PER-ROW hoisted norms
+    (``nrm``/``q_nrm`` columns the caller computed before its candidate
+    join) — bit-identical to ``round(cosine(q_emb, embedding), 6)``
+    (tests/test_functions.py), but each norm is folded once per row, not
+    once per candidate pair."""
     return F.round(
         cosine_pre(
             dot(F.col("q_emb"), F.col("embedding")),
@@ -79,22 +93,7 @@ def s01_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``a2_ahuja.py:296-319``). Ranking key is the *rounded* cosine with
     vec_id tiebreak, so the ordering is engine-independent.
     """
-    e = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _pair_cosine()
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        q.join(e, F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rk", "cos_sim")
-        .orderBy("q_id", "rk")
-    )
+    return _top_k(spark, sf_dir, k=TOP_K)
 
 
 _COS_SQL = """
@@ -106,12 +105,13 @@ ROUND(
 """.format(dim=DIM)
 
 _S01_SQL = f"""
-WITH q AS (
-  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % {QUERY_MOD} = 0
+WITH v AS (SELECT * FROM embeddings WHERE embedding IS NOT NULL),
+q AS (
+  SELECT vec_id AS q_id, embedding AS q_emb FROM v WHERE vec_id % {QUERY_MOD} = 0
 ),
 scored AS (
   SELECT q.q_id, e.vec_id, {_COS_SQL} AS cos_sim
-  FROM q JOIN embeddings e ON e.vec_id <> q.q_id
+  FROM q JOIN v e ON e.vec_id <> q.q_id
 ),
 ranked AS (
   SELECT q_id, vec_id, cos_sim,
@@ -128,47 +128,6 @@ ORDER BY q_id, rk
 # s02 — random-hyperplane LSH ANN
 # ---------------------------------------------------------------------------
 
-def _plane_sign(p: int, d: int) -> int:
-    """Deterministic ±1 from md5 parity — reproducible in SQL as
-    md5(p || '_' || d)."""
-    nib = int(hashlib.md5(f"{p}_{d}".encode()).hexdigest()[0], 16)
-    return 1 if nib % 2 == 0 else -1
-
-
-def hyperplane_bucket_expr(
-    emb_col: str = "embedding",
-    n_planes: int = N_PLANES,
-    dim: int = DIM,
-    plane_offset: int = 0,
-):
-    """Signature bucket = Σ_p [dot(plane_{offset+p}, emb) > 0]·2^p as one
-    JVM expression tree (plane entries are literals — no shuffle, no
-    UDF). ``plane_offset`` selects an independent plane family — table t
-    of an OR-construction uses offset t·n_planes (s06).
-
-    Public: also the coarse-partition step of d11 semantic dedup
-    (operators/dedup.py), which needs the identical md5-parity planes so
-    its DuckDB oracle can regenerate the cells.
-
-    Round-12 note: an unrolled (64 explicit multiply-add terms per
-    plane) spelling was measured and REJECTED — the deep Add chains
-    cost more in analysis/codegen per query than the interpreted HOF
-    fold costs at bench scale (s06 carries 18 planes × 2 join sides;
-    OPTIMIZATION_r12.md has the A/B). The HOF form stays: one compact
-    node per plane."""
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        signs = F.array(
-            *[F.lit(float(_plane_sign(plane_offset + p, d))) for d in range(dim)]
-        )
-        proj = dot(signs, F.col(emb_col))
-        bucket = bucket + F.when(proj > 0, F.lit(2 ** p)).otherwise(F.lit(0))
-    return bucket
-
-
-_bucket_expr = hyperplane_bucket_expr
-
-
 def s02_ann_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane LSH: same-bucket candidates, then exact
     cosine top-3 within the bucket.
@@ -178,28 +137,7 @@ def s02_ann_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 signature bits (one 64-bucket partition), so the exact scoring
     touches ~1/64 of the corpus per query.
     """
-    e = _with_norm(
-        load_table(spark, sf_dir, "embeddings").withColumn("bucket", _bucket_expr())
-    )
-    q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _pair_cosine()
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        q.join(
-            e,
-            (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("q_id")),
-        )
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rk", "cos_sim")
-        .orderBy("q_id", "rk")
-    )
+    return _top_k(spark, sf_dir, k=3, method="lsh", n_planes=N_PLANES, n_tables=1)
 
 
 def hyperplane_bucket_sql(
@@ -208,9 +146,9 @@ def hyperplane_bucket_sql(
     dim: int = DIM,
     plane_offset: int = 0,
 ) -> str:
-    """DuckDB twin of :func:`hyperplane_bucket_expr` (same md5-parity
-    planes, same power-of-two packing, same ``plane_offset`` table
-    selection)."""
+    """DuckDB twin of :func:`functions.vectors.hyperplane_bucket_expr`
+    (same md5-parity planes, same power-of-two packing, same
+    ``plane_offset`` table selection)."""
     terms = []
     for p in range(n_planes):
         signs = ", ".join(
@@ -224,12 +162,12 @@ def hyperplane_bucket_sql(
     return " + ".join(terms)
 
 
-_bucket_sql = hyperplane_bucket_sql
-
-
 def _s02_sql() -> str:
     return f"""
-WITH b AS (SELECT vec_id, embedding, {_bucket_sql()} AS bucket FROM embeddings),
+WITH b AS (
+  SELECT vec_id, embedding, {hyperplane_bucket_sql()} AS bucket
+  FROM embeddings WHERE embedding IS NOT NULL
+),
 q AS (
   SELECT vec_id AS q_id, embedding AS q_emb, bucket AS q_bucket
   FROM b WHERE vec_id % {QUERY_MOD} = 0
@@ -268,15 +206,16 @@ def s03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     than paying an exact-arithmetic centroid (which floats cannot give
     without fixed-point quantization of the INPUT vectors).
     """
-    e = load_table(spark, sf_dir, "embeddings")
+    e = _embeddings(spark, sf_dir)
     # centroids in long form: (label, pos, c_val)
     cent = (
         e.select("label", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("label", "pos")
         .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("c_val"))
     )
-    q = _queries_df(e).select(
-        "q_id", "q_emb", F.posexplode("q_emb").alias("pos", "q_val")
+    q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("q_id"),
+        F.posexplode("embedding").alias("pos", "q_val"),
     )
     # query→cell scores (dot in long form; rounded before ranking)
     cell = (
@@ -308,13 +247,14 @@ def s03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _S03_SQL = f"""
-WITH cent AS (
+WITH v AS (SELECT * FROM embeddings WHERE embedding IS NOT NULL),
+cent AS (
   SELECT label, i AS pos, ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS c_val
-  FROM embeddings CROSS JOIN range(1, {DIM} + 1) t(i)
+  FROM v CROSS JOIN range(1, {DIM} + 1) t(i)
   GROUP BY label, i
 ),
 q AS (
-  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % {QUERY_MOD} = 0
+  SELECT vec_id AS q_id, embedding AS q_emb FROM v WHERE vec_id % {QUERY_MOD} = 0
 ),
 cell AS (
   SELECT q.q_id, cent.label,
@@ -332,7 +272,7 @@ probed AS (
 scored AS (
   SELECT q.q_id, e.vec_id, {_COS_SQL} AS cos_sim
   FROM probed p
-  JOIN embeddings e ON e.label = p.label
+  JOIN v e ON e.label = p.label
   JOIN q ON q.q_id = p.q_id
   WHERE e.vec_id <> q.q_id
 ),
@@ -417,7 +357,9 @@ def s05_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     free, because it rides the same join.
     """
     e = _with_norm(
-        load_table(spark, sf_dir, "embeddings").withColumn("bucket", _bucket_expr())
+        _embeddings(spark, sf_dir).withColumn(
+            "bucket", F.expr(hyperplane_bucket_expr("embedding", N_PLANES, DIM))
+        )
     )
     q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("q_id"),
@@ -451,7 +393,10 @@ def s05_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _s05_sql() -> str:
     return f"""
-WITH b AS (SELECT vec_id, embedding, label, {_bucket_sql()} AS bucket FROM embeddings),
+WITH b AS (
+  SELECT vec_id, embedding, label, {hyperplane_bucket_sql()} AS bucket
+  FROM embeddings WHERE embedding IS NOT NULL
+),
 q AS (
   SELECT vec_id AS q_id, embedding AS q_emb, bucket AS q_bucket, label AS q_label
   FROM b WHERE vec_id % {QUERY_MOD} = 0
@@ -493,68 +438,30 @@ def s06_ann_multitable_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is EXACTLY s02's table — s06's candidate set is a superset of
     s02's by construction (pinned in tests).
 
-    Scale shape (the part that must survive 100 TB): the per-table
-    signatures are computed in ONE projection as literal expression
-    trees (no UDF, no shuffle), then exploded to a NARROW
-    (vec_id, t, bucket) relation — ids and 13 bytes per row, never the
-    embeddings, so the ×L blow-up ships ~nothing. ONE equi-join on the
-    composite (t, bucket) key serves all L tables in a single shuffle
-    (vs L joins + union), duplicates collapse on (q_id, vec_id) BEFORE
-    any exact math so a pair colliding in all L tables is scored once,
-    and only the surviving candidate pairs rejoin the wide embedding
-    table for scoring.
+    Scale shape (the part that must survive 100 TB), all in
+    :func:`api.ann_join`: the per-table signatures are computed in ONE
+    projection (no UDF, no shuffle), then exploded to a NARROW
+    (id, _t, _b) relation — never the embeddings, so the ×L blow-up
+    ships ~nothing. ONE equi-join on the composite (_t, _b) key serves
+    all L tables in a single shuffle (vs L joins + union), duplicates
+    collapse on (q_id, neighbor_id) BEFORE any exact math so a pair
+    colliding in all L tables is scored once, and only the surviving
+    candidate pairs rejoin the wide embedding table for scoring.
 
     Reference anchor: the multi-band OR over minhash signatures in
     ``Assignment 2/a2_ahuja.py:140-170`` (computeBuckets2's 39 bands
     ARE an OR-construction); here the bands are whole hyperplane
-    tables over an embedding column. Production API form:
-    ``api.ann_join(..., method='lsh', n_tables=L)`` — same plane
-    families, same narrow candidate stage, arbitrary tables.
+    tables over an embedding column.
     """
-    e = load_table(spark, sf_dir, "embeddings")
-    sig = e.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    _bucket_expr(plane_offset=t * N_PLANES)
-                    for t in range(N_TABLES)
-                ]
-            )
-        ).alias("t", "bucket"),
-    )
-    q_sig = sig.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), "t", "bucket"
-    )
-    cand = (
-        q_sig.join(sig, ["t", "bucket"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
-        .distinct()
-    )
-    en = _with_norm(e)
-    q = en.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _pair_cosine()
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        cand.join(q, "q_id")
-        .join(en, "vec_id")
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rk", "cos_sim")
-        .orderBy("q_id", "rk")
+    return _top_k(
+        spark, sf_dir, k=3, method="lsh", n_planes=N_PLANES, n_tables=N_TABLES
     )
 
 
 def _s06_sql() -> str:
     per_table = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {t} AS t, {_bucket_sql(plane_offset=t * N_PLANES)} AS bucket "
-        "FROM embeddings"
+        f"SELECT vec_id, {t} AS t, {hyperplane_bucket_sql(plane_offset=t * N_PLANES)} AS bucket "
+        "FROM embeddings WHERE embedding IS NOT NULL"
         for t in range(N_TABLES)
     )
     return f"""

@@ -81,20 +81,94 @@ def test_ann_join_lsh_mode_runs(spark, sf_correctness):
 
 def test_ann_join_lsh_dynamic_signs_match_literal_dim(spark, sf_correctness):
     """The per-row size()-based plane signs (dim=None, no driver action)
-    must bucket identically to the literal-array form (dim given)."""
+    must bucket identically to the literal-array form (dim given), also
+    at a nonzero plane offset (tables 1 and 2 of n_tables=3)."""
     e = load_table(spark, sf_correctness, "embeddings")
     q = e.filter(F.col("vec_id") % similarity.QUERY_MOD == 0)
-    dyn = {
-        (r["q_id"], r["rk"], r["neighbor_id"])
-        for r in api.ann_join(q, e, "embedding", "vec_id", k=3, method="lsh").collect()
-    }
-    lit = {
-        (r["q_id"], r["rk"], r["neighbor_id"])
-        for r in api.ann_join(
-            q, e, "embedding", "vec_id", k=3, method="lsh", dim=64
-        ).collect()
-    }
-    assert dyn == lit
+    for n_tables in (1, 3):
+        dyn = {
+            (r["q_id"], r["rk"], r["neighbor_id"])
+            for r in api.ann_join(
+                q, e, "embedding", "vec_id", k=3, method="lsh", n_tables=n_tables
+            ).collect()
+        }
+        lit = {
+            (r["q_id"], r["rk"], r["neighbor_id"])
+            for r in api.ann_join(
+                q, e, "embedding", "vec_id", k=3, method="lsh",
+                n_tables=n_tables, dim=64,
+            ).collect()
+        }
+        assert dyn == lit, n_tables
+
+
+def test_ann_join_bruteforce_matches_numpy(spark, sf_correctness):
+    """Independent of Spark and of the DuckDB twin (s01 is ann_join
+    itself): every returned neighbor's cos_sim is the numpy cosine, and
+    each query's top-k scores are numpy's top-k scores."""
+    import numpy as np
+
+    e = load_table(spark, sf_correctness, "embeddings")
+    q = e.filter(F.col("vec_id") % similarity.QUERY_MOD == 0)
+    rows = e.orderBy("vec_id").collect()
+    ids = [r["vec_id"] for r in rows]
+    pos = {v: i for i, v in enumerate(ids)}
+    x = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    xn = x / np.linalg.norm(x, axis=1, keepdims=True)
+    got: dict[int, list] = {}
+    for r in api.ann_join(q, e, "embedding", "vec_id", k=5).collect():
+        got.setdefault(r["q_id"], []).append(r)
+    assert sorted(got) == [v for v in ids if v % similarity.QUERY_MOD == 0]
+    for qid, out in got.items():
+        sims = xn @ xn[pos[qid]]
+        sims[pos[qid]] = -np.inf  # exclude_self
+        for r in out:
+            assert abs(r["cos_sim"] - sims[pos[r["neighbor_id"]]]) < 1e-6, (qid, r)
+        top = np.sort(sims)[::-1][:5]
+        assert np.allclose(sorted((r["cos_sim"] for r in out), reverse=True), top, atol=1e-6)
+
+
+def test_ann_join_lsh_scores_repeated_ids_like_bruteforce(spark):
+    """Ids need not be unique: a corpus id on two rows yields two
+    neighbor rows in both methods, even with one table (every vector
+    here is a positive multiple of one direction, so all share every
+    bucket)."""
+    v = [0.3, -1.0, 0.7, 0.2]
+    q = spark.createDataFrame([(1, v)], ["id", "emb"])
+    c = spark.createDataFrame(
+        [(7, v), (7, [2 * a for a in v]), (8, [3 * a for a in v])], ["id", "emb"]
+    )
+
+    def run(**kw):
+        return sorted(
+            (r["neighbor_id"], r["cos_sim"])
+            for r in api.ann_join(q, c, "emb", "id", k=10, **kw).collect()
+        )
+
+    exact = run()
+    assert [n for n, _ in exact] == [7, 7, 8]
+    assert run(method="lsh", n_planes=2) == exact
+    assert run(method="lsh", n_planes=2, dim=4) == exact
+
+
+def test_semantic_dedup_resolves_nested_embedding_column(spark):
+    """``emb_col`` goes through F.col, so a struct field works and gives
+    the same verdicts as the flat column."""
+    rows = [(1, [1.0, 0.5, -0.2, 0.1]), (2, [1.0, 0.5, -0.2, 0.11]), (3, [-1.0, 0.2, 0.9, 0.0])]
+    flat = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    nested = flat.select("vec_id", F.struct("embedding").alias("s"))
+
+    def verdicts(df, col):
+        return sorted(
+            tuple(r)
+            for r in api.semantic_dedup(df, col, "vec_id", planes=2, dim=4)
+            .select("vec_id", "cell", "kept", "dup_of")
+            .collect()
+        )
+
+    exp = verdicts(flat, "embedding")
+    assert exp[1][2:] == (False, 1)
+    assert verdicts(nested, "s.embedding") == exp
 
 
 def test_ann_join_lsh_multiprobe_recall(spark, sf_smoke):

@@ -324,10 +324,8 @@ def test_d11_semantic_verdicts_match_numpy(spark, sf_correctness):
     share with the Spark plan."""
     import numpy as np
 
-    from big_data_analytics_cse545_spark.operators.similarity import (
-        DIM,
-        _plane_sign,
-    )
+    from big_data_analytics_cse545_spark.functions.vectors import _plane_sign
+    from big_data_analytics_cse545_spark.operators.similarity import DIM
     from big_data_analytics_cse545_spark.sources import load_table
 
     got = {

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from big_data_analytics_cse545_spark.operators import similarity
+from big_data_analytics_cse545_spark.operators import dedup, similarity
 from tests.oracle_utils import assert_parity
 
 
@@ -15,6 +15,38 @@ def test_similarity_oracle_parity(spark, sf_correctness, name):
         assert df.count() > 0
         return
     assert_parity(df, similarity.ORACLE[name], sf_correctness, name)
+
+
+def test_similarity_queries_match_twins_on_null_embeddings(spark, sf_smoke, tmp_path):
+    """s01/s02/s06 run through api.ann_join, s03/s05 over its kernels,
+    d11 over the same bucket kernel; every s-query drops NULL vectors
+    (api.ann_join's policy) and its DuckDB twin must agree, on a corpus
+    with NULL embeddings in both the query set (vec_id 200) and the
+    corpus (none exist in the generated fixtures)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src = sf_smoke
+    d = str(tmp_path / "null_emb_sf")
+    os.makedirs(d)
+    for f in os.listdir(src):
+        if f.endswith(".parquet") and f != "embeddings.parquet":
+            os.symlink(os.path.join(src, f), os.path.join(d, f))
+    t = pq.read_table(os.path.join(src, "embeddings.parquet"))
+    ids = t.column("vec_id").to_numpy()
+    emb = t.column("embedding").combine_chunks()
+    null = pa.scalar(None, emb.type)
+    emb = pc.if_else(pa.array((ids % 7 == 3) | (ids == 200)), null, emb)
+    t = t.set_column(t.schema.get_field_index("embedding"), "embedding", emb)
+    pq.write_table(t, os.path.join(d, "embeddings.parquet"))
+    assert t.column("embedding").null_count > 0
+    for name in sorted(similarity.ORACLE):
+        assert_parity(similarity.QUERIES[name](spark, d), similarity.ORACLE[name], d, name)
+    name = "d11_semantic_dedup"
+    assert_parity(dedup.QUERIES[name](spark, d), dedup.ORACLE[name], d, name)
 
 
 def test_ivf_finds_exact_top1_mostly(spark, sf_correctness):

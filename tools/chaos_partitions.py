@@ -49,8 +49,8 @@ source in documents, props/event_type/value in events, embedding/label
 in embeddings, each on a distinct prime modulus) — found six more:
 null embeddings crashed every numpy/MLlib consumer (d05, s04, p03,
 p04, p05, p07). Policy: null vectors are EXCLUDED from similarity and
-training math at the scan (explicit isNotNull — Catalyst already
-infers it for the expression-based twins); pinned by
+training math at the scan (explicit isNotNull, on the twins too:
+Catalyst infers none from the similarity joins); pinned by
 tests/test_projection.py::test_null_embeddings_are_excluded_not_crashes.
 
 With ``--oracle``, the sweep hash-compares EVERY oracle-backed query
